@@ -86,7 +86,8 @@ def _batch_to_jsonl(batch) -> str:
     ``repr`` — json.dumps delegates to ``float.__repr__`` — with the
     non-finite spellings special-cased to json.dumps' Infinity/NaN;
     strings go through the SAME ``encode_basestring_ascii`` function
-    json.dumps calls. Any other arrow type falls back to the exact
+    json.dumps calls. Any other arrow type, a batch without columns,
+    or a field name json.dumps would escape falls back to the exact
     old loop. The write->read double fidelity contract (shortest
     round-trip repr) is therefore unchanged."""
     import math
@@ -118,18 +119,21 @@ def _batch_to_jsonl(batch) -> str:
             ]
         return None
 
-    names = batch.schema.names
-    if any('"' in n or "\\" in n or "%" in n for n in names):
-        # a field name needing escaping (never the ledger schema):
-        # exact old behavior
+    def dumps_per_row():
         return "".join(json.dumps(r) + "\n" for r in batch.to_pylist())
+
+    names = batch.schema.names
+    # no columns ('{}' per row) or a field name json.dumps would
+    # escape, or that breaks the %-template (never the ledger schema)
+    if batch.num_columns == 0 or any(
+        "%" in n or json.dumps(n) != f'"{n}"' for n in names
+    ):
+        return dumps_per_row()
     cols = []
     for i, name in enumerate(names):
         t = tokens(batch.column(i), batch.schema.types[i])
-        if t is None:  # unexpected type: exact old behavior
-            return "".join(
-                json.dumps(r) + "\n" for r in batch.to_pylist()
-            )
+        if t is None:  # unexpected type
+            return dumps_per_row()
         cols.append(t)
     template = (
         "{" + ", ".join(f'"{n}": %s' for n in names) + "}\n"
@@ -341,30 +345,20 @@ class LedgerWriter(DataSourceArrowWriter):
     level; a reader listing files mid-commit may briefly see old+new
     parts — the manifest is the commit point). Values serialize via
     json.dumps (shortest round-trip repr), so doubles survive the
-    write->read cycle bit-exactly."""
+    write->read cycle bit-exactly.
+
+    Concurrent jobs on one ledger serialize their ``commit`` on the
+    ledger's write lock (sources/write_lock.py), taken and released
+    inside ``commit``: the manifest merge is read-merge-write and an
+    overwrite deletes unclaimed ``*.json`` files, so two unserialized
+    commits would lose an update or delete the other's parts. Tasks
+    stage ``.part-….json.tmp`` files that no commit deletes, so an
+    append committed after an overwrite yields both, and an overwrite
+    committed after an append yields only its own rows."""
 
     def __init__(self, options: dict, overwrite: bool = False):
         self.path = options["path"]
         self.overwrite = overwrite
-        # Exclusive job-scope write lock, acquired at plan time on
-        # the driver and released in commit/abort: the manifest
-        # commit is read-merge-write and (overwrite or not) ends by
-        # deleting unclaimed ledger files — two UNSERIALIZED jobs
-        # would each merge the same prior manifest (lost update) and
-        # the first committer would delete the second's in-flight
-        # parts. The lock is the commit-log mutual exclusion a
-        # transactional format provides; uncontended cost is two
-        # syscalls. (Unpickling on executors never re-runs __init__,
-        # so only the driver touches the lock.)
-        from etl_jobs_spark.sources.write_lock import acquire_table_lock
-
-        # the token travels WITH this (picklable) writer: plan-time
-        # acquire and job-commit release run in different Python
-        # worker processes, so the lock module's process-local
-        # ownership record can't connect them (round-15 regression:
-        # a token-verified release that consulted only process state
-        # no-opped here and leaked the lock for stale_sec)
-        self._lock_token = acquire_table_lock(self.path, timeout_sec=120.0)
 
     def write(self, iterator):
         import uuid
@@ -386,38 +380,38 @@ class LedgerWriter(DataSourceArrowWriter):
         return _LedgerCommit(name, n)
 
     def commit(self, messages):
-        manifest_path = os.path.join(self.path, "_LEDGER_COMMIT.manifest")
-        total = 0
-        files = []
-        # an append job EXTENDS the committed file list; an overwrite
-        # job records only its own parts and clears the old ledger
-        # LAST — the destructive step is deferred to job-commit so an
-        # aborted overwrite cannot leave an empty ledger behind
-        if not self.overwrite and os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                prior = json.load(f)
-            files = list(prior.get("files", []))
-            total = int(prior.get("n_rows", 0))
-        for m in messages:
-            os.rename(
-                os.path.join(self.path, f".{m.filename}.tmp"),
-                os.path.join(self.path, m.filename),
-            )
-            files.append(m.filename)
-            total += m.n_rows
-        manifest = {"files": sorted(files), "n_rows": total}
-        with open(manifest_path, "w") as f:
-            json.dump(manifest, f)
-        if self.overwrite:
-            # new parts + manifest are durable; now drop every ledger
-            # file the new manifest doesn't claim
-            keep = set(files)
-            for n in os.listdir(self.path):
-                if n.endswith(".json") and n not in keep:
-                    os.remove(os.path.join(self.path, n))
-        from etl_jobs_spark.sources.write_lock import release_table_lock
+        from etl_jobs_spark.sources.write_lock import table_write_lock
 
-        release_table_lock(self.path, token=self._lock_token)
+        with table_write_lock(self.path, timeout_sec=120.0):
+            manifest_path = os.path.join(self.path, "_LEDGER_COMMIT.manifest")
+            total = 0
+            files = []
+            # an append job EXTENDS the committed file list; an overwrite
+            # job records only its own parts and clears the old ledger
+            # LAST — the destructive step is deferred to job-commit so an
+            # aborted overwrite cannot leave an empty ledger behind
+            if not self.overwrite and os.path.exists(manifest_path):
+                with open(manifest_path) as f:
+                    prior = json.load(f)
+                files = list(prior.get("files", []))
+                total = int(prior.get("n_rows", 0))
+            for m in messages:
+                os.rename(
+                    os.path.join(self.path, f".{m.filename}.tmp"),
+                    os.path.join(self.path, m.filename),
+                )
+                files.append(m.filename)
+                total += m.n_rows
+            manifest = {"files": sorted(files), "n_rows": total}
+            with open(manifest_path, "w") as f:
+                json.dump(manifest, f)
+            if self.overwrite:
+                # new parts + manifest are durable; now drop every ledger
+                # file the new manifest doesn't claim
+                keep = set(files)
+                for n in os.listdir(self.path):
+                    if n.endswith(".json") and n not in keep:
+                        os.remove(os.path.join(self.path, n))
 
     def abort(self, messages):
         # a failed task's commit message arrives as None (pyspark
@@ -428,9 +422,6 @@ class LedgerWriter(DataSourceArrowWriter):
             tmp = os.path.join(self.path, f".{m.filename}.tmp")
             if os.path.exists(tmp):
                 os.remove(tmp)
-        from etl_jobs_spark.sources.write_lock import release_table_lock
-
-        release_table_lock(self.path, token=self._lock_token)
 
 
 class LedgerStreamWriter(DataSourceStreamArrowWriter):

@@ -6,7 +6,7 @@ commit log of add/remove actions, snapshots resolved by folding the
 log prefix, time travel for free). This module adds the WRITE side —
 the minimal Delta/Iceberg-style commit protocol (VERDICT r14 item 7)
 that makes concurrent and even FOREIGN writers safe on plain
-parquet, where the posix write lock (`write_lock.py`) only protects
+parquet, where the `flock` write lock (`write_lock.py`) only protects
 writers that opt into this repo's lock:
 
 1. stage: the writer lands its parquet files under a UNIQUE

@@ -99,9 +99,10 @@ def sink_parquet(
     (sources/write_lock.py): plain parquet shares one
     ``_temporary`` staging dir across concurrent jobs, and the
     round-13 two-writer probe measured both loud failures and one
-    TORN append from that race. Uncontended cost is two syscalls; a
-    second concurrent writer through this API serializes (or fails
-    loudly on timeout) instead of racing. Disjoint-partition
+    TORN append from that race. Uncontended cost is one open, flock,
+    unlock and close of a hidden sibling lockfile; a second
+    concurrent writer through this API serializes (or fails loudly
+    on timeout) instead of racing. Disjoint-partition
     concurrency wants ``sink_parquet_partitions_direct`` instead."""
     from etl_jobs_spark.sources.write_lock import table_write_lock
 
@@ -161,7 +162,8 @@ def sink_parquet_partitions_direct(
             dirname = _escape_partition_value(v)
         # lock PER PARTITION DIR: disjoint-value writers stay fully
         # concurrent (the point of this helper); same-value writers
-        # serialize instead of racing one committer root.
+        # serialize instead of racing one committer root. The lockfile
+        # is <root>/.<col>=<v>.__write_lock, which Spark's reader skips.
         target = f"{root}/{partition_col}={dirname}"
         with table_write_lock(target):
             part.drop(partition_col).write.mode("append").parquet(target)

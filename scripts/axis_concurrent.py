@@ -15,13 +15,15 @@ outcome. The pinned contract after this round:
   (ConcurrentWriteError / job failure with state equal to one
   complete writer) — ZERO silent torn states.
 
-Mechanism added this round (sources/write_lock.py): an exclusive
+Mechanism (sources/write_lock.py): a kernel ``flock`` on a hidden
 sibling lockfile per table root, held by sink_parquet /
-sink_json_report / compact_parquet / the ledger writer's
-plan-to-commit window, and per PARTITION dir by
-sink_parquet_partitions_direct (disjoint-value writers stay
-concurrent). The raw unlocked race is kept as a measured BASELINE
-cell — the reason the lock exists, never a contract.
+sink_json_report / compact_parquet / the ledger writer's job commit,
+and per PARTITION dir by sink_parquet_partitions_direct
+(disjoint-value writers stay concurrent). The raw unlocked race is
+kept as a measured BASELINE cell — the reason the lock exists, never
+a contract. Every cell that writes a table root also checks that the
+root still holds only data files, ``col=value`` dirs and names
+Spark's file index skips (tests/conftest.py assert_table_root_clean).
 
 Row → cell map (rows with no write surface are recorded as such):
   sink_jdbc_append          jdbc_two_writers_append (Derby row locks)
@@ -32,7 +34,7 @@ Row → cell map (rows with no write surface are recorded as such):
                             partitions_direct_disjoint + _same_value
   sink_custom_ledger        ledger_append_two_writers (manifest
                             merge + unclaimed-file cleanup race,
-                            serialized by the job-scope lock)
+                            serialized by the commit-scope lock)
   sink_queue / source_queue queue_disjoint_batch_writers
   (baseline)                parquet_append_raw_unsafe_baseline
   merge_upsert_customers / cdc_apply_changelog /
@@ -57,9 +59,20 @@ from pyspark.sql import functions as F
 from etl_jobs_spark.scratch import scratch_dir
 from etl_jobs_spark.session import get_spark
 from etl_jobs_spark.sources import writers
-from etl_jobs_spark.sources.write_lock import ConcurrentWriteError
+from etl_jobs_spark.sources.write_lock import ConcurrentWriteError, table_write_lock
+from tests.conftest import assert_table_root_clean
 
 N_ROWS = 20_000
+
+
+def _dirty(*roots, suffix: str = ".parquet") -> str | None:
+    """The first table-root hygiene failure among ``roots``, or None."""
+    try:
+        for root in roots:
+            assert_table_root_clean(root, suffix)
+    except AssertionError as e:
+        return str(e)[:200]
+    return None
 
 
 def _tagged(spark, tag: str, n: int = N_ROWS):
@@ -138,15 +151,16 @@ def cell_parquet_append_locked(spark, sf_dir):
         for r in back.groupBy("writer").agg(F.count("*").alias("n")).collect()
     }
     loud = [e for e in errs if e is not None]
+    dirty = _dirty(root)
     if not loud:
         ok = counts.get("A") == N_ROWS and counts.get("B") == N_ROWS
-        return ok, f"serialized both-complete counts={counts}"
+        return ok and not dirty, f"serialized both-complete counts={counts} dirty={dirty}"
     # a loud rejection is acceptable ONLY if the surviving state is
     # the other writer's complete output (no torn partial)
     ok = all(isinstance(e, ConcurrentWriteError) for e in loud) and all(
         v == N_ROWS for v in counts.values()
     )
-    return ok, f"loud={len(loud)} counts={counts}"
+    return ok and not dirty, f"loud={len(loud)} counts={counts} dirty={dirty}"
 
 
 def cell_parquet_overwrite_locked(spark, sf_dir):
@@ -163,13 +177,15 @@ def cell_parquet_overwrite_locked(spark, sf_dir):
     }
     loud = [e for e in errs if e is not None]
     # contract: last-wins COMPLETE — exactly one writer's full output
+    dirty = _dirty(root)
     ok = (
         len(counts) == 1
         and set(counts) <= {"A", "B"}
         and next(iter(counts.values())) == N_ROWS
         and all(isinstance(e, ConcurrentWriteError) for e in loud)
+        and not dirty
     )
-    return ok, f"final={counts} loud={len(loud)}"
+    return ok, f"final={counts} loud={len(loud)} dirty={dirty}"
 
 
 def cell_json_report_race(spark, sf_dir):
@@ -182,12 +198,14 @@ def cell_json_report_race(spark, sf_dir):
     )
     back = spark.read.schema("total BIGINT, who STRING").json(path).collect()
     loud = [e for e in errs if e is not None]
+    dirty = _dirty(path, suffix=".json")
     ok = (
         len(back) == 1
         and (back[0]["total"], back[0]["who"]) in ((1000, "A"), (2000, "B"))
         and all(isinstance(e, ConcurrentWriteError) for e in loud)
+        and not dirty
     )
-    return ok, f"final={back} loud={len(loud)}"
+    return ok, f"final={back} loud={len(loud)} dirty={dirty}"
 
 
 def cell_compact_vs_appenders(spark, sf_dir):
@@ -216,10 +234,11 @@ def cell_compact_vs_appenders(spark, sf_dir):
     stop.set()
     total = spark.read.parquet(path).count()
     want = 2000 + n_appended[0]
-    ok = errs == [None, None] and total == want
+    dirty = _dirty(path)
+    ok = errs == [None, None] and total == want and not dirty
     return ok, (
         f"rows={total} want={want} (lost={want - total}) "
-        f"errs={[str(e)[:80] for e in errs if e]}"
+        f"errs={[str(e)[:80] for e in errs if e]} dirty={dirty}"
     )
 
 
@@ -243,8 +262,9 @@ def cell_partitions_direct_disjoint(spark, sf_dir):
         r["writer"]: r["n"]
         for r in back.groupBy("writer").agg(F.count("*").alias("n")).collect()
     }
-    ok = errs == [None, None] and counts == {"A": 4000, "B": 4000}
-    return ok, f"counts={counts} errs={[str(e)[:80] for e in errs if e]}"
+    dirty = _dirty(root)
+    ok = errs == [None, None] and counts == {"A": 4000, "B": 4000} and not dirty
+    return ok, f"counts={counts} errs={[str(e)[:80] for e in errs if e]} dirty={dirty}"
 
 
 def cell_partitions_direct_same_value(spark, sf_dir):
@@ -265,13 +285,14 @@ def cell_partitions_direct_same_value(spark, sf_dir):
         for r in back.groupBy("writer").agg(F.count("*").alias("n")).collect()
     }
     loud = [e for e in errs if e is not None]
+    dirty = _dirty(root)
     if not loud:
         ok = counts == {"A": 4000, "B": 4000}
-        return ok, f"serialized both-complete counts={counts}"
+        return ok and not dirty, f"serialized both-complete counts={counts} dirty={dirty}"
     ok = all(isinstance(e, ConcurrentWriteError) for e in loud) and all(
         v == 4000 for v in counts.values()
     )
-    return ok, f"loud={len(loud)} counts={counts}"
+    return ok and not dirty, f"loud={len(loud)} counts={counts} dirty={dirty}"
 
 
 _LEDGER_WRITER_SNIPPET = """
@@ -299,10 +320,9 @@ def cell_ledger_two_writers(spark, sf_dir):
     a table on a cluster; also, Spark 4.1 binds a Python data
     source registration to the registering thread's artifact state,
     so sibling in-process threads cannot even resolve the format).
-    The job-scope lock added this round serializes the manifest
-    read-merge-write + unclaimed-file cleanup; without it the first
-    committer deletes the second's in-flight parts and the second's
-    manifest drops the first's rows (lost update both ways)."""
+    The commit-scope lock serializes the manifest read-merge-write +
+    unclaimed-file cleanup; without it two commits would merge the
+    same prior manifest and one would drop the other's rows."""
     import subprocess
 
     from etl_jobs_spark.sources import ledger_source
@@ -328,8 +348,9 @@ def cell_ledger_two_writers(spark, sf_dir):
         r["event_type"]: r["n"]
         for r in back.groupBy("event_type").agg(F.count("*").alias("n")).collect()
     }
-    ok = not errs and counts == {"A": 5000, "B": 5000}
-    return ok, f"counts={counts} errs={errs}"
+    dirty = _dirty(out, suffix=".json")
+    ok = not errs and counts == {"A": 5000, "B": 5000} and not dirty
+    return ok, f"counts={counts} errs={errs} dirty={dirty}"
 
 
 def cell_queue_disjoint_batch_writers(spark, sf_dir):
@@ -356,8 +377,9 @@ def cell_queue_disjoint_batch_writers(spark, sf_dir):
         r["writer"]: r["c"]
         for r in back.groupBy("writer").agg(F.count("*").alias("c")).collect()
     }
-    ok = errs == [None, None] and n == 12 and per == {"A": 6, "B": 6}
-    return ok, f"n={n} per={per}"
+    dirty = _dirty(*root.iterdir(), suffix=".json")
+    ok = errs == [None, None] and n == 12 and per == {"A": 6, "B": 6} and not dirty
+    return ok, f"n={n} per={per} dirty={dirty}"
 
 
 def cell_parquet_append_raw_baseline(spark, sf_dir):
@@ -397,7 +419,9 @@ def cell_parquet_append_raw_baseline(spark, sf_dir):
         )
         if torn and n_loud == 0:
             silent_torn += 1
-        outcomes.append({"loud_failures": n_loud, "counts": counts, "torn": torn})
+        outcomes.append(
+            {"loud_failures": n_loud, "counts": counts, "torn": torn, "dirty": _dirty(root)}
+        )
     detail = json.dumps(
         {"silent_torn_trials": silent_torn, "trials": outcomes}
     )[:500]
@@ -415,11 +439,12 @@ NO_WRITE_SURFACE = {
 }
 
 def cell_lock_holder_crash_recovery(spark, sf_dir):
-    """VERDICT r14 item 6: SIGKILL a writer PROCESS while it holds
-    the table write lock mid-write (between stage and commit), then
-    prove a second writer recovers promptly via the dead-pid break
-    path — not the 120 s ConcurrentWriteError timeout, not the 1 h
-    stale_sec window — with no torn visible state."""
+    """SIGKILL a writer PROCESS while it holds the table write lock
+    mid-write (between stage and commit), then prove the kernel freed
+    the lock with the dead holder's fd: the lock is free within 1 s
+    (not the 30 s ConcurrentWriteError timeout), a second writer
+    lands in full, the crashed writer's staged tmp stays invisible,
+    and the table root stays clean."""
     import os
     import signal
     import subprocess
@@ -429,7 +454,7 @@ def cell_lock_holder_crash_recovery(spark, sf_dir):
 
     # the crashing holder: acquires the SAME lock primitive every
     # locked sink uses, stages an (invisible) tmp part, then hangs —
-    # simulating a driver that died between plan/stage and commit
+    # simulating a driver that died between stage and commit
     child = subprocess.Popen(
         [
             sys.executable,
@@ -453,19 +478,14 @@ def cell_lock_holder_crash_recovery(spark, sf_dir):
     child.send_signal(signal.SIGKILL)
     child.wait()
 
-    lock = Path(str(root) + ".__write_lock")
-    if not lock.exists():
-        return False, "lockfile vanished with the crash (nothing to break)"
-
     t0 = time.perf_counter()
     try:
-        # default timeout_sec=30 < the old failure mode (the dead
-        # pid's lock blocking until stale_sec=3600); recovery must
-        # come from the pid-liveness break, i.e. near-instantly
-        writers.sink_parquet(_tagged(spark, "B"), str(root), mode="append")
+        with table_write_lock(root, timeout_sec=1.0):
+            pass
     except ConcurrentWriteError as e:
-        return False, f"second writer timed out behind dead holder: {e}"
+        return False, f"lock still held 1 s after its holder died: {e}"
     took = time.perf_counter() - t0
+    writers.sink_parquet(_tagged(spark, "B"), str(root), mode="append")
 
     back = spark.read.parquet(str(root))
     counts = {
@@ -473,16 +493,17 @@ def cell_lock_holder_crash_recovery(spark, sf_dir):
         for r in back.groupBy("writer").agg(F.count("*").alias("n")).collect()
     }
     torn = {w: n for w, n in counts.items() if w not in ("seed", "B")}
+    dirty = _dirty(root)
     ok = (
         counts.get("seed") == 2000
         and counts.get("B") == N_ROWS
         and not torn
-        and not lock.exists()  # B's release cleaned up after itself
         and os.path.exists(str(root / ".part-crash.parquet.tmp"))
+        and not dirty
     )
     return ok, (
-        f"recovered in {took:.2f}s via dead-pid break, counts={counts}, "
-        f"torn={torn or 'none'}, lock_released={not lock.exists()}"
+        f"lock free {took:.3f}s after SIGKILL, counts={counts}, "
+        f"torn={torn or 'none'}, dirty={dirty}"
     )
 
 
@@ -511,14 +532,20 @@ def cell_txn_log_two_writers(spark, sf_dir):
         r["writer"]: r["n"]
         for r in back.groupBy("writer").agg(F.count("*").alias("n")).collect()
     }
+    # a txn table is read through its log: each staged data dir is a
+    # plain parquet root, and the log holds only version manifests
+    dirty = _dirty(*(root / d for d in T.snapshot_files(root))) or _dirty(
+        root / T.LOG_DIR, suffix=".json"
+    )
     ok = (
         counts == {"A": N_ROWS, "B": N_ROWS}
         and T.current_version(root) == 2
         and T.orphans(root) == ["data_ghost"]
+        and not dirty
     )
     return ok, (
         f"both-complete counts={counts}, versions={T.current_version(root)}, "
-        f"orphans={T.orphans(root)}"
+        f"orphans={T.orphans(root)} dirty={dirty}"
     )
 
 

@@ -58,6 +58,32 @@ def assert_matches_oracle(spark_df, oracle_con, sql: str, float_rtol: float = 0.
     frames_match(spark_df.toPandas(), oracle_con.sql(sql).df(), float_rtol)
 
 
+def _hidden(name: str) -> bool:
+    # Spark's file index skips ".x" and "_x", except "_" names with "="
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def assert_table_root_clean(root, data_suffix: str = ".parquet") -> None:
+    """A written table root must read back through a plain
+    ``spark.read``: it may hold only data files (``data_suffix``),
+    ``col=value`` partition directories (checked recursively) and
+    names Spark's file index skips — lock files, staging dirs and
+    manifests must all be hidden."""
+    root = Path(root)
+    assert root.is_dir(), f"{root} was never written"
+    foreign = []
+    for dirpath, dirnames, filenames in os.walk(root):
+        rel = Path(dirpath).relative_to(root)
+        foreign += [rel / d for d in dirnames if not _hidden(d) and "=" not in d]
+        foreign += [
+            rel / f
+            for f in filenames
+            if not _hidden(f) and not f.endswith(data_suffix)
+        ]
+        dirnames[:] = [d for d in dirnames if not _hidden(d)]
+    assert not foreign, f"foreign entries in table root {root}: {foreign}"
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",

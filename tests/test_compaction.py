@@ -8,7 +8,7 @@ from pathlib import Path
 
 from etl_jobs_spark.sources.readers import read_table
 from etl_jobs_spark.sources.writers import compact_parquet
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, assert_table_root_clean
 
 
 def test_compaction_preserves_rows(spark):
@@ -22,3 +22,4 @@ def test_compaction_preserves_rows(spark):
     after = spark.read.parquet(d)
     assert after.count() == n
     assert len([f for f in Path(d).glob("part-*")]) == 4
+    assert_table_root_clean(d)

@@ -200,3 +200,15 @@ def test_batch_to_jsonl_byte_identical_to_json_dumps():
     )
     want2 = "".join(json.dumps(r) + "\n" for r in batch2.to_pylist())
     assert _batch_to_jsonl(batch2) == want2
+
+    # field names json.dumps escapes (non-ASCII, control characters,
+    # quotes, %) and a batch with rows but no columns ('{}' per row)
+    odd = pa.record_batch(
+        {"naïve": [1, 2], "tab\there": [3, 4], 'q"\\': [5, 6], "5%": [7, 8]}
+    )
+    empty = pa.RecordBatch.from_struct_array(pa.array([{}] * 3, pa.struct([])))
+    for b in (odd, empty):
+        assert _batch_to_jsonl(b) == "".join(
+            json.dumps(r) + "\n" for r in b.to_pylist()
+        )
+    assert _batch_to_jsonl(empty) == "{}\n" * 3

@@ -1,16 +1,19 @@
 """Custom Python DataSource WRITE path (sources/ledger_source.py
 LedgerWriter): append manifest accumulation, overwrite replacement,
-and abort's tolerance of failed-task (None) commit messages."""
+abort's tolerance of failed-task (None) commit messages, and
+commits serialized on the ledger's write lock."""
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 
 import pytest
 
 from etl_jobs_spark.scratch import scratch_dir
 from etl_jobs_spark.sources import ledger_source
+from tests.conftest import assert_table_root_clean
 
 
 @pytest.fixture()
@@ -42,6 +45,7 @@ def test_append_extends_manifest(spark, ledger_df):
     assert len(m["files"]) == len(
         [n for n in os.listdir(out) if n.endswith(".json")]
     )
+    assert_table_root_clean(out, ".json")
 
 
 def test_overwrite_replaces(spark, ledger_df):
@@ -55,6 +59,7 @@ def test_overwrite_replaces(spark, ledger_df):
     assert _manifest(out)["n_rows"] == 10
     back = spark.read.format("event_ledger").option("path", out).load()
     assert back.count() == 10
+    assert_table_root_clean(out, ".json")
 
 
 def test_abort_tolerates_failed_task_messages(tmp_path):
@@ -127,3 +132,52 @@ def test_stream_writer_replayed_batch_replaces_itself(tmp_path):
     assert files == ["stream-b000007-00000.json"], files
     manifest = json.loads((out / "_LEDGER_STREAM.manifest").read_text())
     assert manifest["batches"]["7"]["n_rows"] == 2
+    assert_table_root_clean(out, ".json")
+
+
+def test_commit_waits_for_the_table_lock(tmp_path):
+    """Job commit runs under the ledger's write lock: while another
+    writer holds it, the manifest merge does not start."""
+    from etl_jobs_spark.sources.write_lock import table_write_lock
+
+    w = ledger_source.LedgerWriter({"path": str(tmp_path)})
+    (tmp_path / ".part-z.json.tmp").write_text('{"event_id": 1}\n')
+    with table_write_lock(str(tmp_path)):
+        t = threading.Thread(
+            target=w.commit, args=([ledger_source._LedgerCommit("part-z.json", 1)],)
+        )
+        t.start()
+        t.join(0.5)
+        assert t.is_alive()
+        assert not (tmp_path / "_LEDGER_COMMIT.manifest").exists()
+    t.join(10)
+    assert _manifest(str(tmp_path)) == {"files": ["part-z.json"], "n_rows": 1}
+
+
+def test_concurrent_appends_land_both_writers(spark, ledger_df):
+    """Two concurrent appends to one ledger keep every row of both
+    writers, and the manifest's row count is their total."""
+    out = str(scratch_dir("ledger_w_concurrent"))
+    errs = []
+
+    def append():
+        try:
+            # the JVM resolves a Python data source through the
+            # calling thread's active session, unset in a new thread
+            jvm_session = spark._jvm.org.apache.spark.sql.SparkSession
+            jvm_session.setActiveSession(spark._jsparkSession)
+            ledger_df.write.format("event_ledger").option("path", out).mode(
+                "append"
+            ).save()
+        except Exception as e:  # pragma: no cover
+            errs.append(e)
+
+    ts = [threading.Thread(target=append) for _ in range(2)]
+    for t in ts:
+        t.start()
+    for t in ts:
+        t.join()
+    assert not errs, errs
+    assert _manifest(out)["n_rows"] == 20
+    assert spark.read.format("event_ledger").option("path", out).load().count() == 20
+    assert_table_root_clean(out, ".json")

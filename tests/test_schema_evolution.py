@@ -30,6 +30,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from etl_jobs_spark.sources import readers
+from tests.conftest import assert_table_root_clean
 
 
 @pytest.fixture(scope="module")
@@ -164,6 +165,7 @@ def test_append_evolved_batch_roundtrip(spark, tmp_path):
     )
     writers.sink_parquet(v1, d, partition_by=["day"])
     writers.sink_parquet(v2, d, mode="append", partition_by=["day"])
+    assert_table_root_clean(d)
 
     got = (
         readers.scan_glob_union(

@@ -13,12 +13,23 @@ import pytest
 
 from etl_jobs_spark.sources import txn_log as T
 from etl_jobs_spark.sources.write_lock import ConcurrentWriteError
+from tests.conftest import assert_table_root_clean
 
 
 def _df(spark, tag: str, n: int = 100):
     return spark.range(n).selectExpr(
         "id AS event_id", f"'{tag}' AS writer"
     )
+
+
+def _assert_txn_root_clean(root: Path) -> None:
+    """Only staged ``data_*`` parquet roots and the version log."""
+    for d in root.iterdir():
+        if d.name == T.LOG_DIR:
+            assert_table_root_clean(d, ".json")
+        else:
+            assert d.name.startswith("data_"), d
+            assert_table_root_clean(d)
 
 
 def test_append_commits_accumulate(spark, tmp_path):
@@ -106,6 +117,7 @@ def test_two_writers_no_lost_update(spark, tmp_path):
         t.join()
     assert not errs, errs
     assert T.current_version(root) == 4
+    _assert_txn_root_clean(root)
     counts = dict(
         T.read_txn_table(spark, root)
         .groupBy("writer")
@@ -191,6 +203,7 @@ def test_stream_sink_exactly_once_and_replay_noop(spark, tmp_path):
     )
     assert out is None, "replayed batch committed twice"
     assert T.read_txn_table(spark, root).count() == 200
+    _assert_txn_root_clean(root)
 
 
 def test_vacuum_reclaims_orphans_and_expired(spark, tmp_path):
